@@ -1,16 +1,26 @@
-"""Graph operators: weighted PageRank as DataFrame iterations.
+"""Graph operators: iterative vertex-vector rounds over an edge list.
 
-Complements the connected-components operators in :mod:`dedup` — PageRank is
-the canonical "iterate a vector against an edge list" shape: each round is
-one join (edge ⋈ rank on src) + one aggregation (sum contributions by dst),
-both shuffling on graph keys. No adjacency structure ever materializes on
-the driver.
+PageRank is the canonical shape: each round is one join (edge ⋈ rank on
+src) + one aggregation (sum contributions by dst), both shuffling on graph
+keys. Every operator here runs its rounds one of two ways, chosen by one
+bounded collect of the edge rollup (:func:`_bounded_collect`):
+
+- up to ``_DRIVER_EDGE_CAP`` edges, the rounds replay on the DRIVER in
+  Python over the collected rollup. A dimension-sized graph (nation trade,
+  label graphs) would otherwise pay the ~60 ms local-mode job floor on
+  every join and aggregation of every round;
+- past the cap (and for :func:`hash_random_walk` over node types whose
+  string form Python cannot reproduce), the distributed rounds run and no
+  adjacency structure materializes on the driver. A graph past the cap
+  pays one capped collect first.
 
 Cross-engine determinism (the oracle unrolls the same rounds as SQL CTEs):
 every per-edge contribution is rounded to 12 dp (row-deterministic double
 arithmetic), summed as exact DECIMAL (order-free), and each round's rank is
 re-rounded to 12 dp — so the iterate is bit-identical regardless of
-partitioning, on Spark and DuckDB alike.
+partitioning, on Spark and DuckDB alike. The driver replays use Python
+twins of Spark's rounding and decimal casts (:func:`_round_py`,
+:func:`_dec_py`), so both paths return the same rows.
 """
 
 from __future__ import annotations
@@ -19,16 +29,42 @@ import decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from ..functions import small_df
 
 #: fixed-point scale for per-round rank values and edge contributions
 _SCALE = 12
 
-#: driver-iterate safety cap: a caller that declares its graph
-#: dimension-bounded gets the driver-side iterate only while the rolled-up
-#: edge list actually is bounded — past this the distributed path runs
+#: largest edge rollup the driver replays; past it the distributed rounds run
 _DRIVER_EDGE_CAP = 65536
 
 _Q12 = decimal.Decimal(1).scaleb(-_SCALE)
+
+
+def _bounded_collect(df: DataFrame) -> list | None:
+    """``df``'s rows when there are at most ``_DRIVER_EDGE_CAP`` of them,
+    else ``None`` (the caller then runs its distributed rounds). The limit
+    pushes down, so an oversized graph costs one capped job, never a driver
+    blowup. The cap is read at call time, so tests can lower it."""
+    rows = df.limit(_DRIVER_EDGE_CAP + 1).collect()
+    return rows if len(rows) <= _DRIVER_EDGE_CAP else None
+
+
+def _driver_df(spark, fields, rows) -> DataFrame:
+    """The driver replays' shared tail: ``rows`` in leading-key order,
+    NULL last, as a one-partition DataFrame with ``fields`` =
+    ``[(name, type), ...]``."""
+    schema = StructType([StructField(n, t) for n, t in fields])
+    return small_df(spark, sorted(rows, key=lambda r: (r[0] is None, r)), schema)
 
 
 def _round_py(x: float, q: decimal.Decimal) -> float:
@@ -73,8 +109,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    broadcast_rank: bool = False,
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Weighted PageRank with ``iters`` synchronous rounds over an edge
     DataFrame (src, dst, w). Returns (node, rank).
@@ -84,38 +118,17 @@ def pagerank(
     computed once. Dangling mass is dropped (simplified PageRank), matching
     the oracle formulation. For long chains of rounds, callers should
     `localCheckpoint` the iterate every few rounds (the certified query
-    uses 3 rounds — lineage stays shallow).
-
-    ``broadcast_rank`` (opt-in — only the caller knows its graph is
-    dimension-bounded; auto-detection would cost a full distinct count)
-    carries the rank vector through BROADCAST joins instead of shuffled
-    ones — for dimension-sized vertex sets (nation graphs, label graphs,
-    cluster summaries) each round then costs one shuffle (the dst
-    aggregation) instead of three. Web-scale graphs keep the shuffled
-    path: a rank vector with millions of entries must never transit the
-    driver.
-
-    ``driver_iterate`` (opt-in, same caller-declared dimension bound as
-    ``broadcast_rank``) runs the rounds on the DRIVER over the collected
-    edge rollup — the perceptron/k-means convention, where O(dim²) control
-    state ferries through the driver while the data-sized rollup that
-    produced it stays distributed. Each local-mode Spark job costs a
-    ~60 ms scheduler floor, so a 3-round iterate over a 25-node graph is
-    pure job-count tax (~25 jobs) distributed; the driver iterate replays
-    the identical 12-dp fixed-point arithmetic in Python (bit-equal: see
-    :func:`_round12`) in zero jobs. Guarded by a LimitPushDown-bounded
-    collect — past ``_DRIVER_EDGE_CAP`` edges the distributed path runs,
-    so a misdeclared web-scale graph degrades to correct, not to a driver
-    blowup."""
+    uses 3 rounds — lineage stays shallow). An edge list within the driver
+    cap replays the identical 12-dp fixed-point rounds on the driver
+    (:func:`_personalized_pagerank_driver` with every node a seed)."""
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"), F.col(weight).alias("_w")
     )
-    if driver_iterate:
-        head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _pagerank_driver(
-                edges.sparkSession, head, iters, damping, e.schema[0].dataType
-            )
+    rows = _bounded_collect(e)
+    if rows is not None:
+        return _personalized_pagerank_driver(
+            edges.sparkSession, rows, None, iters, damping, e.schema[0].dataType
+        )
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -126,24 +139,16 @@ def pagerank(
     # loop and snapshot — each round then joins the rank vector against one
     # static edge list instead of re-deriving (edges ⋈ out-weights) per
     # round (one join + one shuffle subtree fewer per iteration).
-    # (r12: an earlier upfront repartition(_dst) for the broadcast mode was
-    # removed — localCheckpoint surfaces as ExistingRDD with
-    # UnknownPartitioning, so Catalyst cannot reuse the layout and the
-    # repartition was a pure extra shuffle; the r11 plan dumps proved the
-    # per-round Exchange count unchanged.)
     e_norm = e.join(outw, "_src").localCheckpoint(eager=True)
-    maybe_b = F.broadcast if broadcast_rank else (lambda df: df)
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("_n"))
     base = nodes.crossJoin(F.broadcast(n_nodes))
-    if broadcast_rank:
-        base = base.localCheckpoint(eager=True)
     rank = base.select(
         "node", "_n", F.round(F.lit(1.0) / F.col("_n"), _SCALE).alias("rank")
     )
     for _ in range(iters):
         contrib = (
             e_norm
-            .join(maybe_b(rank.select(F.col("node").alias("_src"), "rank")), "_src")
+            .join(rank.select(F.col("node").alias("_src"), "rank"), "_src")
             .select(
                 "_dst",
                 F.round(F.col("rank") * F.col("_w") / F.col("_out_w"), _SCALE)
@@ -153,7 +158,7 @@ def pagerank(
         )
         summed = contrib.groupBy("_dst").agg(F.sum("_c").alias("_s"))
         rank = (
-            base.join(maybe_b(summed), base.node == summed._dst, "left")
+            base.join(summed, base.node == summed._dst, "left")
             .select(
                 "node",
                 "_n",
@@ -165,58 +170,6 @@ def pagerank(
             )
         )
     return rank.select("node", "rank")
-
-
-def _pagerank_driver(spark, edge_rows, iters, damping, node_type) -> DataFrame:
-    """Driver-side PageRank rounds over a collected dimension-bounded edge
-    rollup — bit-identical to the distributed iterate: contributions are
-    ``round(rank * w / out_w, 12)`` doubles cast onto the exact
-    DECIMAL(20,12) grid (:func:`_dec12`), summed exactly (Python Decimal,
-    order-free like Spark's decimal sum), and each round's rank re-rounds
-    to 12 dp via the same shortest-repr HALF_UP (:func:`_round12`). Weight
-    sums accumulate in the weights' native Python type (int for BIGINT
-    counts, Decimal for decimals — exact in both engines); float weights
-    are order-dependent in the distributed path already and carry the same
-    caveat here."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..functions import small_df
-
-    out_w: dict = {}
-    nodes = set()
-    for r in edge_rows:
-        s, d, w = r[0], r[1], r[2]
-        nodes.add(s)
-        nodes.add(d)
-        if s is not None:
-            out_w[s] = out_w[s] + w if s in out_w else w
-    n = len(nodes)
-    schema = StructType(
-        [StructField("node", node_type), StructField("rank", DoubleType())]
-    )
-    if n == 0:
-        return small_df(spark, [], schema)
-    rank = {v: _round12(1.0 / n) for v in nodes}
-    base = (1.0 - damping) / n
-    for _ in range(iters):
-        acc: dict = {}
-        for r in edge_rows:
-            s, d, w = r[0], r[1], r[2]
-            if s is None or d is None:
-                # NULL keys never match the distributed equi-joins: a NULL
-                # src drops from the normalized edge list, a NULL dst's
-                # contribution sum never re-attaches to the rank vector
-                continue
-            c = _dec12(_round12(rank[s] * float(w) / float(out_w[s])))
-            if c is None:  # non-finite contribution casts to NULL; sum skips it
-                continue
-            acc[d] = acc[d] + c if d in acc else c
-        rank = {
-            v: _round12(base + damping * (float(acc[v]) if v in acc else 0.0))
-            for v in nodes
-        }
-    ordered = sorted(nodes, key=lambda v: (v is None, v))
-    return small_df(spark, [(v, rank[v]) for v in ordered], schema)
 
 
 def pagerank_oracle_sql(
@@ -271,7 +224,6 @@ def bfs_levels(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Breadth-first levels from the lexicographically-smallest vertex:
     ``rounds`` synchronous frontier expansions over the edge list, the
@@ -280,8 +232,8 @@ def bfs_levels(
 
     Scale shape: each round is one join (edges ⋈ current levels on src) +
     one aggregation (min candidate level by dst) + one left join back onto
-    the node set — all shuffles keyed by graph vertices, no adjacency on
-    the driver; the source vertex arrives as a broadcast 1-row aggregate.
+    the node set — all shuffles keyed by graph vertices; the source vertex
+    arrives as a broadcast 1-row aggregate.
     Unreached nodes carry an INT infinity sentinel so the iterate is pure
     integer arithmetic (no NULL semantics to diverge between engines)."""
     inf = _bfs_inf(rounds)
@@ -290,16 +242,9 @@ def bfs_levels(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_iterate:
-        # caller-declared dimension-bounded graph: expand frontiers on the
-        # driver over the collected distinct edge set (pure INT min —
-        # trivially bit-equal; the perceptron/pagerank convention, r12).
-        # Bounded collect; past the cap the distributed path runs.
-        head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _bfs_driver(
-                edges.sparkSession, head, rounds, e.schema[0].dataType
-            )
+    rows = _bounded_collect(e)
+    if rows is not None:
+        return _bfs_driver(edges.sparkSession, rows, rounds, e.schema[0].dataType)
     nodes = e.select(F.col("_s").alias("node")).union(
         e.select(F.col("_d").alias("node"))
     ).distinct()
@@ -331,41 +276,43 @@ def bfs_levels(
 
 
 def _bfs_driver(spark, edge_rows, rounds, node_type) -> DataFrame:
-    """Driver-side synchronous frontier expansion over the collected
-    distinct edge set — exact INT min against the rounds+1 infinity
-    sentinel, identical to the distributed rounds (source = minimum node
-    over src ∪ dst, matching the distributed ``nodes.agg(min)``)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    from ..functions import small_df
-
-    inf = _bfs_inf(rounds)
-    nodes = set()
-    for r in edge_rows:
-        nodes.add(r[0])
-        nodes.add(r[1])
-    schema = StructType(
-        [StructField("node", node_type), StructField("level", IntegerType())]
+    """Driver-side frontier expansion over the collected distinct edge
+    set: unit-cost :func:`_min_plus_driver` from the minimum node over
+    src ∪ dst (the distributed ``nodes.agg(min)``) against the rounds+1
+    INT infinity sentinel."""
+    nodes = [v for r in edge_rows for v in (r[0], r[1]) if v is not None]
+    return _min_plus_driver(
+        spark,
+        [(s, d, 1) for s, d in edge_rows],
+        rounds,
+        min(nodes, default=None),
+        _bfs_inf(rounds),
+        [("node", node_type), ("level", IntegerType())],
     )
-    if not nodes:
-        return small_df(spark, [], schema)
-    nn = [v for v in nodes if v is not None]
-    if not nn:  # all-NULL vertices: the distributed min is NULL, nothing expands
-        return small_df(spark, [], schema)
-    src0 = min(nn)
-    lvl = {v: (0 if v == src0 else inf) for v in nodes}
+
+
+def _min_plus_driver(spark, edge_rows, rounds, src0, inf, fields) -> DataFrame:
+    """Driver-side synchronous relaxation shared by BFS and SSSP, identical
+    to their distributed rounds: from ``src0`` (``None`` when the
+    distributed source min is NULL, so nothing relaxes), ``rounds`` passes
+    of exact integer min-plus over the collected (s, d, cost) rows — finite
+    sources only, min candidate per destination, least-folded against the
+    infinity sentinel ``inf``. Returns the finite (node, distance) rows."""
+    if src0 is None:
+        return _driver_df(spark, fields, [])
+    nodes = {v for r in edge_rows for v in (r[0], r[1])}
+    dist = {v: (0 if v == src0 else inf) for v in nodes}
     for _ in range(rounds):
         cand: dict = {}
-        for s, d in edge_rows:
+        for s, d, c in edge_rows:
             if s is None or d is None:  # NULL keys never match the equi-joins
                 continue
-            if lvl[s] < inf:
-                m = lvl[s] + 1
+            if dist[s] < inf:
+                m = dist[s] + c
                 if d not in cand or m < cand[d]:
                     cand[d] = m
-        lvl = {v: min(lvl[v], cand.get(v, inf)) for v in nodes}
-    ordered = sorted((v for v in nodes if lvl[v] < inf), key=lambda v: (v is None, v))
-    return small_df(spark, [(v, lvl[v]) for v in ordered], schema)
+        dist = {v: min(dist[v], cand.get(v, inf)) for v in nodes}
+    return _driver_df(spark, fields, [(v, x) for v, x in dist.items() if x < inf])
 
 
 def bfs_oracle_sql(edges_sql: str, rounds: int = 3) -> str:
@@ -408,7 +355,6 @@ def sssp_cheapest(
     src: str = "src",
     dst: str = "dst",
     cost: str = "cost",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Weighted single-source shortest path (Bellman-Ford relaxation) from
     the lexicographically-smallest vertex: ``rounds`` synchronous passes
@@ -428,16 +374,9 @@ def sssp_cheapest(
         .agg(F.min(F.col(cost).cast("bigint")).alias("_c"))
         .localCheckpoint(eager=True)
     )
-    if driver_iterate:
-        # caller-declared dimension-bounded graph: relax on the driver
-        # over the collected min-collapsed rollup (pure BIGINT min-plus —
-        # trivially bit-equal; the perceptron/pagerank convention, r12).
-        # Bounded collect; past the cap the distributed path runs.
-        head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _sssp_driver(
-                edges.sparkSession, head, rounds, e.schema[0].dataType
-            )
+    rows = _bounded_collect(e)
+    if rows is not None:
+        return _sssp_driver(edges.sparkSession, rows, rounds, e.schema[0].dataType)
     nodes = e.select(F.col("_s").alias("node")).union(
         e.select(F.col("_d").alias("node"))
     ).distinct()
@@ -473,41 +412,18 @@ def sssp_cheapest(
 
 
 def _sssp_driver(spark, edge_rows, rounds, node_type) -> DataFrame:
-    """Driver-side Bellman-Ford over the collected (s, d, c) rollup —
-    exact BIGINT min-plus, identical to the distributed rounds (finite-
-    source relaxation, min candidate per destination, least-fold against
-    the INT infinity sentinel)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..functions import small_df
-
-    inf = _SSSP_INF
-    nodes = set()
-    for r in edge_rows:
-        nodes.add(r[0])
-        nodes.add(r[1])
-    schema = StructType(
-        [StructField("node", node_type), StructField("dist", LongType())]
-    )
-    if not nodes:
-        return small_df(spark, [], schema)
+    """Driver-side Bellman-Ford over the collected min-collapsed (s, d, c)
+    rollup: exact BIGINT :func:`_min_plus_driver` from the smallest vertex
+    with out-edges (the distributed ``e.agg(min(_s))``)."""
     srcs = [r[0] for r in edge_rows if r[0] is not None]
-    if not srcs:  # all-NULL sources: the distributed min is NULL, nothing relaxes
-        return small_df(spark, [], schema)
-    src0 = min(srcs)
-    dist = {v: (0 if v == src0 else inf) for v in nodes}
-    for _ in range(rounds):
-        cand: dict = {}
-        for s, d, c in edge_rows:
-            if s is None or d is None:  # NULL keys never match the equi-joins
-                continue
-            if dist[s] < inf:
-                m = dist[s] + c
-                if d not in cand or m < cand[d]:
-                    cand[d] = m
-        dist = {v: min(dist[v], cand.get(v, inf)) for v in nodes}
-    ordered = sorted((v for v in nodes if dist[v] < inf), key=lambda v: (v is None, v))
-    return small_df(spark, [(v, dist[v]) for v in ordered], schema)
+    return _min_plus_driver(
+        spark,
+        edge_rows,
+        rounds,
+        min(srcs, default=None),
+        _SSSP_INF,
+        [("node", node_type), ("dist", LongType())],
+    )
 
 
 def sssp_oracle_sql(edges_sql: str, rounds: int = 4) -> str:
@@ -547,8 +463,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    broadcast_labels: bool = False,
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Synchronous weighted label propagation (community detection): every
     node starts labeled with itself; each round it adopts the label with
@@ -566,8 +480,8 @@ def label_propagation(
     the (votes DESC, label ASC) window rank but without the window's
     per-partition sort (a reduction combines partially on the map side; a
     rank window cannot). Same iterate family as
-    :func:`pagerank`/:func:`sssp_cheapest`; no adjacency on the driver,
-    lineage cut per round via localCheckpoint on the label vector."""
+    :func:`pagerank`/:func:`sssp_cheapest`; lineage cut per round via
+    localCheckpoint on the label vector."""
     if rounds < 1:
         raise ValueError(f"label_propagation needs rounds >= 1, got {rounds}")
     # sum weights in DECIMAL(38,12) (exact, partition-order-free — a raw
@@ -590,34 +504,18 @@ def label_propagation(
         .groupBy("_a", "_b")
         .agg(F.floor(F.sum("_w") + half).cast("bigint").alias("_w"))
     )
-    if driver_iterate:
-        # dimension-bounded graphs (caller-declared): run the rounds on
-        # the driver over the collected symmetrized rollup — the
-        # perceptron convention (O(dim²) control state through the
-        # driver, the data-sized rollup stays distributed). The iterate
-        # is exact BIGINT votes with a deterministic argmax, so the
-        # Python replay is trivially bit-equal; distributed, each of the
-        # 3 rounds costs 2 aggregations + a checkpoint ≈ a dozen ~60 ms
-        # local-mode jobs over a 25-node vector. Bounded collect: past
-        # the cap the distributed path runs (misdeclared graphs degrade
-        # to correct, never to a driver blowup).
-        head = und.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _label_propagation_driver(
-                edges.sparkSession, head, rounds, und.schema[0].dataType
-            )
-    # (r12: the broadcast-mode upfront repartition(_b) was removed —
-    # localCheckpoint surfaces as ExistingRDD with UnknownPartitioning, so
-    # the vote groupBy could never reuse the layout and the repartition
-    # was a pure extra shuffle; the r11 plan dumps proved it.)
+    rows = _bounded_collect(und)
+    if rows is not None:
+        return _label_propagation_driver(
+            edges.sparkSession, rows, rounds, und.schema[0].dataType
+        )
     und = und.localCheckpoint(eager=True)
-    maybe_b = F.broadcast if broadcast_labels else (lambda df: df)
     labels = und.select(F.col("_a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     for _ in range(rounds):
         votes = (
-            und.join(maybe_b(labels.select(F.col("node").alias("_a"), "label")), "_a")
+            und.join(labels.select(F.col("node").alias("_a"), "label"), "_a")
             .groupBy("_b", "label")
             .agg(F.sum("_w").alias("_v"))
         )
@@ -627,7 +525,7 @@ def label_propagation(
             ).alias("_new")
         ).select(F.col("_b").alias("node"), "_new")
         labels = (
-            labels.join(maybe_b(best), "node", "left")
+            labels.join(best, "node", "left")
             .select("node", F.coalesce(F.col("_new"), F.col("label")).alias("label"))
             .localCheckpoint(eager=False)
         )
@@ -640,10 +538,6 @@ def _label_propagation_driver(spark, und_rows, rounds, node_type) -> DataFrame:
     votes are exact BIGINT sums (Python int, order-free) and the argmax is
     the same deterministic (votes DESC, label ASC) rule ``min_by`` encodes
     via its (-votes, label) struct ordering."""
-    from pyspark.sql.types import StructField, StructType
-
-    from ..functions import small_df
-
     labels = {r[0]: r[0] for r in und_rows}
     for _ in range(rounds):
         votes: dict = {}
@@ -663,11 +557,9 @@ def _label_propagation_driver(spark, und_rows, rounds, node_type) -> DataFrame:
                 best[b] = ((-v, lab), lab)
         labels = {node: best[node][1] if node in best else lab
                   for node, lab in labels.items()}
-    schema = StructType(
-        [StructField("node", node_type), StructField("label", node_type)]
+    return _driver_df(
+        spark, [("node", node_type), ("label", node_type)], labels.items()
     )
-    ordered = sorted(labels, key=lambda v: (v is None, v))
-    return small_df(spark, [(v, labels[v]) for v in ordered], schema)
 
 
 def label_propagation_oracle_sql(edges_sql: str, rounds: int = 3) -> str:
@@ -709,7 +601,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """HITS hubs-and-authorities: ``iters`` synchronous rounds of
     a = norm(Aᵀh), h = norm(A a) over a weighted edge list, max-normalized
@@ -769,16 +660,11 @@ def hits(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"),
         w_guarded.cast(w_dec).alias("_w"),
     ).localCheckpoint(eager=True)
-    if driver_iterate:
-        # caller-declared dimension bound (pagerank convention, r12): the
-        # weights arrive as exact decimal(20,6) values from the guarded
-        # checkpoint, so the driver replay works in the identical decimal
-        # algebra; bounded collect, distributed fallback past the cap
-        head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _hits_driver(
-                edges.sparkSession, head, iters, e.schema[0].dataType
-            )
+    # the weights arrive as exact decimal(20,6) values from the guarded
+    # checkpoint, so the driver replay works in the identical decimal algebra
+    rows = _bounded_collect(e)
+    if rows is not None:
+        return _hits_driver(edges.sparkSession, rows, iters, e.schema[0].dataType)
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -851,23 +737,7 @@ def _hits_driver(spark, edge_rows, iters, node_type) -> DataFrame:
     when every input is)."""
     import math
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..functions import small_df
-
-    nodes = set()
-    for r in edge_rows:
-        nodes.add(r[0])
-        nodes.add(r[1])
-    schema = StructType(
-        [
-            StructField("node", node_type),
-            StructField("hub", DoubleType()),
-            StructField("authority", DoubleType()),
-        ]
-    )
-    if not nodes:
-        return small_df(spark, [], schema)
+    nodes = {v for r in edge_rows for v in (r[0], r[1])}
 
     def _vec_dec(x):  # CAST(double AS DECIMAL(8,6)) — NULL on non-finite
         return None if x is None else _dec_py(x, _Q6)
@@ -913,13 +783,14 @@ def _hits_driver(spark, edge_rows, iters, node_type) -> DataFrame:
     for _ in range(iters):
         a = _step(h, 0, 1)  # auth from hubs along src -> dst
         h = _step(a, 1, 0)  # hubs from auths along dst -> src
-    ordered = sorted(nodes, key=lambda v: (v is None, v))
 
     def _r6(x):
         return None if x is None else _round_py(x, _Q6)
 
-    return small_df(
-        spark, [(v, _r6(h[v]), _r6(a[v])) for v in ordered], schema
+    return _driver_df(
+        spark,
+        [("node", node_type), ("hub", DoubleType()), ("authority", DoubleType())],
+        [(v, _r6(h[v]), _r6(a[v])) for v in nodes],
     )
 
 
@@ -981,7 +852,6 @@ def hash_random_walk(
     steps: int = 4,
     src: str = "src",
     dst: str = "dst",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Hash-seeded random walk (DeepWalk-style corpus sampling made
     REPRODUCIBLE): one walker starts at every vertex; at step t the walker
@@ -997,22 +867,19 @@ def hash_random_walk(
     each hop is ONE equi-join of the O(V) walker frontier against it
     (shuffle keyed by current node) — |V| walkers, never an edge
     materialization per walker. Multi-walker variants just seed the hash
-    with a walker id."""
+    with a walker id. The driver replay covers string and integral node
+    types only (their Spark string cast equals Python ``str``); other node
+    types always take the distributed hops."""
     from pyspark.sql import Window
 
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    if driver_iterate:
-        from pyspark.sql.types import IntegralType, StringType
-
-        # caller-declared dimension bound (pagerank convention, r12): the
-        # hop rule is md5 over the node's STRING form — replicated with
-        # hashlib only for string/integral node types, whose Spark string
-        # cast equals Python str(); other types keep the distributed path
-        nt = e.schema[0].dataType
-        if isinstance(nt, (StringType, IntegralType)):
-            head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-            if len(head) <= _DRIVER_EDGE_CAP:
-                return _hash_random_walk_driver(edges.sparkSession, head, steps, nt)
+    # the hop rule is md5 over the node's STRING form, replicated with
+    # hashlib only where Spark's string cast equals Python str()
+    nt = e.schema[0].dataType
+    if isinstance(nt, (StringType, IntegralType)):
+        rows = _bounded_collect(e)
+        if rows is not None:
+            return _hash_random_walk_driver(edges.sparkSession, rows, steps, nt)
     w = Window.partitionBy("_s").orderBy("_d")
     nbrs = (
         e.select(
@@ -1055,10 +922,6 @@ def _hash_random_walk_driver(spark, edge_rows, steps, node_type) -> DataFrame:
     Walkers on sinks (or NULL-keyed nodes, which never join) stay put."""
     import hashlib
 
-    from pyspark.sql.types import StructField, StructType
-
-    from ..functions import small_df
-
     adj: dict = {}
     nodes = set()
     for r in edge_rows:
@@ -1069,11 +932,6 @@ def _hash_random_walk_driver(spark, edge_rows, steps, node_type) -> DataFrame:
             adj.setdefault(s, []).append(d)
     for s in adj:
         adj[s].sort(key=lambda v: (v is not None, v if v is not None else ""))
-    schema = StructType(
-        [StructField("start", node_type), StructField("node", node_type)]
-    )
-    if not nodes:
-        return small_df(spark, [], schema)
     walk = {v: v for v in nodes}
     for t in range(1, steps + 1):
         nxt = {}
@@ -1088,8 +946,9 @@ def _hash_random_walk_driver(spark, edge_rows, steps, node_type) -> DataFrame:
             # step (coalesce(_d, cur)) — stay put, don't hop to NULL
             nxt[start] = cur if chosen is None else chosen
         walk = nxt
-    ordered = sorted(nodes, key=lambda v: (v is None, v))
-    return small_df(spark, [(v, walk[v]) for v in ordered], schema)
+    return _driver_df(
+        spark, [("start", node_type), ("node", node_type)], walk.items()
+    )
 
 
 def hash_random_walk_oracle_sql(edges_cte: str, steps: int = 4) -> str:
@@ -1124,7 +983,6 @@ def ktruss_edges(
     rounds: int = 2,
     src: str = "src",
     dst: str = "dst",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """K-truss peeling (bounded synchronous rounds): keep edges whose
     triangle support (common-neighbor count in the undirected graph) is
@@ -1149,16 +1007,11 @@ def ktruss_edges(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_iterate:
-        # caller-declared dimension bound (pagerank convention, r12): the
-        # peel is pure integer set counting — trivially bit-equal on the
-        # driver. Bounded collect, distributed fallback past the cap.
-        # (NULL keys cannot appear: a != b filters them.)
-        head = und.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _ktruss_driver(
-                edges.sparkSession, head, k, rounds, und.schema[0].dataType
-            )
+    rows = _bounded_collect(und)
+    if rows is not None:
+        return _ktruss_driver(
+            edges.sparkSession, rows, k, rounds, und.schema[0].dataType
+        )
     cur = und
     # early stop at the FIXED POINT: a round that drops no edge makes every
     # later round recompute identical support — result-identical to running
@@ -1193,19 +1046,8 @@ def _ktruss_driver(spark, und_rows, k, rounds, node_type) -> DataFrame:
     """Driver-side k-truss peel over the collected symmetrized edge set —
     exact integer triangle-support counting (|N(a) ∩ N(b)| for canonical
     a < b; self-loops already filtered, so no a/b contamination), same
-    fixed-point early stop."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..functions import small_df
-
+    fixed-point early stop. (NULL keys cannot appear: a != b filters them.)"""
     cur = {(r[0], r[1]) for r in und_rows}
-    schema = StructType(
-        [
-            StructField("a", node_type),
-            StructField("b", node_type),
-            StructField("support", LongType()),
-        ]
-    )
     last_sup: dict = {}
     prev_cnt = len(cur)
     for _ in range(rounds):
@@ -1223,8 +1065,11 @@ def _ktruss_driver(spark, und_rows, k, rounds, node_type) -> DataFrame:
         if len(cur) == prev_cnt:
             break
         prev_cnt = len(cur)
-    ordered = sorted(last_sup)
-    return small_df(spark, [(a, b, last_sup[(a, b)]) for a, b in ordered], schema)
+    return _driver_df(
+        spark,
+        [("a", node_type), ("b", node_type), ("support", LongType())],
+        [(a, b, s) for (a, b), s in last_sup.items()],
+    )
 
 
 def ktruss_oracle_sql(edges_cte: str, k: int = 4, rounds: int = 2) -> str:
@@ -1265,7 +1110,6 @@ def kcore_vertices(
     rounds: int = 2,
     src: str = "src",
     dst: str = "dst",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """K-core peeling (bounded synchronous rounds), the VERTEX-side
     complement of :func:`ktruss_edges`: drop vertices whose degree in the
@@ -1289,15 +1133,11 @@ def kcore_vertices(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_iterate:
-        # caller-declared dimension bound (pagerank convention, r12):
-        # integer degree peeling — trivially bit-equal on the driver;
-        # bounded collect, distributed fallback past the cap
-        head = und.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _kcore_driver(
-                edges.sparkSession, head, k, rounds, und.schema[0].dataType
-            )
+    rows = _bounded_collect(und)
+    if rows is not None:
+        return _kcore_driver(
+            edges.sparkSession, rows, k, rounds, und.schema[0].dataType
+        )
     cur = und
     keep_deg = None
     # fixed-point early stop, as in ktruss_edges: an unchanged edge frame
@@ -1327,14 +1167,7 @@ def _kcore_driver(spark, und_rows, k, rounds, node_type) -> DataFrame:
     exact integer degree counting, restriction to survivors on both edge
     ends, same fixed-point early stop; returns the LAST round's
     qualifying (vertex, degree) rows."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..functions import small_df
-
     cur = {(r[0], r[1]) for r in und_rows}
-    schema = StructType(
-        [StructField("a", node_type), StructField("degree", LongType())]
-    )
     keep_deg: dict = {}
     prev_cnt = len(cur)
     for _ in range(rounds):
@@ -1346,8 +1179,9 @@ def _kcore_driver(spark, und_rows, k, rounds, node_type) -> DataFrame:
         if len(cur) == prev_cnt:
             break
         prev_cnt = len(cur)
-    ordered = sorted(keep_deg)
-    return small_df(spark, [(a, keep_deg[a]) for a in ordered], schema)
+    return _driver_df(
+        spark, [("a", node_type), ("degree", LongType())], keep_deg.items()
+    )
 
 
 def kcore_oracle_sql(edges_cte: str, k: int = 6, rounds: int = 2) -> str:
@@ -1386,7 +1220,6 @@ def personalized_pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Personalized PageRank: identical fixed-point discipline as
     :func:`pagerank` (per-edge contributions rounded to 12 dp, exact
@@ -1403,26 +1236,20 @@ def personalized_pagerank(
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"), F.col(weight).alias("_w")
     )
-    if driver_iterate:
-        # caller-declared dimension bound, same contract and bit-exact
-        # replication as pagerank's driver iterate (r12); the seed set is
-        # collected under the same cap
-        e_head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        s_head = (
-            seeds.select(F.col(seeds.columns[0]).alias("node"))
-            .distinct()
-            .limit(_DRIVER_EDGE_CAP + 1)
-            .collect()
+    # the seed set is collected under the same cap as the edges
+    rows = _bounded_collect(e)
+    seed_rows = None if rows is None else _bounded_collect(
+        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
+    )
+    if seed_rows is not None:
+        return _personalized_pagerank_driver(
+            edges.sparkSession,
+            rows,
+            {r[0] for r in seed_rows},
+            iters,
+            damping,
+            e.schema[0].dataType,
         )
-        if len(e_head) <= _DRIVER_EDGE_CAP and len(s_head) <= _DRIVER_EDGE_CAP:
-            return _personalized_pagerank_driver(
-                edges.sparkSession,
-                e_head,
-                {r[0] for r in s_head},
-                iters,
-                damping,
-                e.schema[0].dataType,
-            )
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -1471,15 +1298,24 @@ def personalized_pagerank(
 def _personalized_pagerank_driver(
     spark, edge_rows, seed_set, iters, damping, node_type
 ) -> DataFrame:
-    """Driver-side personalized-PageRank rounds — the pagerank replication
-    with seed-targeted teleport: init mass round(is_seed/|S|, 12), base
+    """Driver-side (personalized) PageRank rounds over a collected edge
+    list — bit-identical to the distributed iterates: contributions are
+    ``round(rank * w / out_w, 12)`` doubles cast onto the exact
+    DECIMAL(20,12) grid (:func:`_dec12`), summed exactly (Python Decimal,
+    order-free like Spark's decimal sum), and each round's rank re-rounds
+    to 12 dp via the same shortest-repr HALF_UP (:func:`_round12`). Weight
+    sums accumulate in the weights' native Python type (int for BIGINT
+    counts, Decimal for decimals — exact in both engines); float weights
+    are order-dependent in the distributed path already and carry the same
+    caveat here.
+
+    Teleport mass lands on the seeds: init round(is_seed/|S|, 12), base
     term ((1-d)·is_seed)/|S|. |S| counts ALL distinct seeds (the
     distributed 1-row count does, graph members or not); a NULL seed rows
-    into the count but never equi-joins a node, exactly as distributed."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..functions import small_df
-
+    into the count but never equi-joins a node, exactly as distributed.
+    ``seed_set=None`` is plain :func:`pagerank`: every node teleports, a
+    NULL node included, and |S| = |V| — the same doubles as its 1/n init
+    and (1-d)/n base term, since multiplying by 1 is exact."""
     out_w: dict = {}
     nodes = set()
     for r in edge_rows:
@@ -1488,27 +1324,25 @@ def _personalized_pagerank_driver(
         nodes.add(d)
         if s is not None:
             out_w[s] = out_w[s] + w if s in out_w else w
-    ns = len(seed_set)
-    schema = StructType(
-        [StructField("node", node_type), StructField("rank", DoubleType())]
-    )
-    if not nodes:
-        return small_df(spark, [], schema)
-    if ns == 0:
+    fields = [("node", node_type), ("rank", DoubleType())]
+    if seed_set is None:
+        teleport, ns = nodes, len(nodes)
+    else:
+        teleport, ns = seed_set - {None}, len(seed_set)
+    if nodes and ns == 0:
         # distributed 0/0 double division is NaN and the iterate keeps it
         # NaN (round(NaN)=NaN); Python would raise, so short-circuit
-        nan = float("nan")
-        ordered = sorted(nodes, key=lambda v: (v is None, v))
-        return small_df(spark, [(v, nan) for v in ordered], schema)
-    is_seed = {
-        v: (1 if (v is not None and v in seed_set) else 0) for v in nodes
-    }
+        return _driver_df(spark, fields, [(v, float("nan")) for v in nodes])
+    is_seed = {v: (1 if v in teleport else 0) for v in nodes}
     rank = {v: _round12(is_seed[v] / ns) for v in nodes}
     for _ in range(iters):
         acc: dict = {}
         for r in edge_rows:
             s, d, w = r[0], r[1], r[2]
             if s is None or d is None:
+                # NULL keys never match the distributed equi-joins: a NULL
+                # src drops from the normalized edge list, a NULL dst's
+                # contribution sum never re-attaches to the rank vector
                 continue
             c = _dec12(_round12(rank[s] * float(w) / float(out_w[s])))
             if c is None:  # non-finite contribution casts to NULL; sum skips it
@@ -1521,8 +1355,7 @@ def _personalized_pagerank_driver(
             )
             for v in nodes
         }
-    ordered = sorted(nodes, key=lambda v: (v is None, v))
-    return small_df(spark, [(v, rank[v]) for v in ordered], schema)
+    return _driver_df(spark, fields, rank.items())
 
 
 def personalized_pagerank_oracle_sql(
@@ -1573,8 +1406,6 @@ def temporal_earliest_arrival(
     src: str = "src",
     dst: str = "dst",
     etime: str = "et",
-    broadcast_arrivals: bool = False,
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Earliest-arrival reachability on a TEMPORAL graph: a path is
     time-respecting when its edge times are non-decreasing, and a node's
@@ -1587,44 +1418,24 @@ def temporal_earliest_arrival(
     per-node minimum — the same iterate discipline as
     :func:`sssp_cheapest` (two node-keyed shuffles per round, lineage cut
     per round, fixed ``rounds`` so both engines run the identical
-    schedule). Arrival times are exact integers.
-
-    ``broadcast_arrivals`` (opt-in, same contract as pagerank's
-    ``broadcast_rank`` — only the caller knows its vertex set is
-    dimension-bounded) carries the arrival vector through BROADCAST joins:
-    the static edge list is then never shuffled per round (one exchange
-    per round — the min-merge — instead of three). Web-scale graphs keep
-    the shuffled path: a large arrival vector must never transit the
-    driver."""
+    schedule). Arrival times are exact integers."""
     if rounds < 1:
         raise ValueError(f"temporal_earliest_arrival needs rounds >= 1, got {rounds}")
     e = edges.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d"),
         F.col(etime).cast("bigint").alias("_t"),
     )
-    if driver_iterate:
-        # caller-declared dimension bound (pagerank convention, r12): the
-        # relaxation is exact integer min over (node, time) — trivially
-        # bit-equal on the driver; bounded collects, distributed fallback
-        e_head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        s_head = (
-            seeds.select(F.col("node"), F.col("t0").cast("bigint").alias("at"))
-            .limit(_DRIVER_EDGE_CAP + 1)
-            .collect()
-        )
-        if len(e_head) <= _DRIVER_EDGE_CAP and len(s_head) <= _DRIVER_EDGE_CAP:
-            return _temporal_earliest_driver(
-                edges.sparkSession, e_head, s_head, rounds, e.schema[0].dataType
-            )
-    maybe_b = F.broadcast if broadcast_arrivals else (lambda df: df)
-    if broadcast_arrivals:
-        # snapshot the static edge list once: every round re-reads it, and
-        # broadcast joins preserve the streamed side so the layout survives
-        e = e.localCheckpoint(eager=True)
     arr = seeds.select(F.col("node"), F.col("t0").cast("bigint").alias("at"))
+    # the seeds are collected under the same cap as the edges
+    rows = _bounded_collect(e)
+    seed_rows = None if rows is None else _bounded_collect(arr)
+    if seed_rows is not None:
+        return _temporal_earliest_driver(
+            edges.sparkSession, rows, seed_rows, rounds, e.schema[0].dataType
+        )
     for _ in range(rounds):
         relaxed = (
-            e.join(maybe_b(arr.select(F.col("node").alias("_s"), "at")), "_s")
+            e.join(arr.select(F.col("node").alias("_s"), "at"), "_s")
             .filter(F.col("_t") >= F.col("at"))
             .select(F.col("_d").alias("node"), F.col("_t").alias("at"))
         )
@@ -1643,10 +1454,6 @@ def _temporal_earliest_driver(spark, e_rows, seed_rows, rounds, node_type) -> Da
     in the first round's groupBy; a NULL source never joins; a NULL
     destination forms its own min group (one NULL output row, exactly as
     the distributed groupBy does); NULL edge times fail the >= filter."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..functions import small_df
-
     arr: dict = {}
     for r in seed_rows:
         n, t = r[0], r[1]
@@ -1667,11 +1474,7 @@ def _temporal_earliest_driver(spark, e_rows, seed_rows, rounds, node_type) -> Da
             if d not in nxt or cur is None or t < cur:
                 nxt[d] = t
         arr = nxt
-    schema = StructType(
-        [StructField("node", node_type), StructField("at", LongType())]
-    )
-    ordered = sorted(arr, key=lambda v: (v is None, v))
-    return small_df(spark, [(v, arr[v]) for v in ordered], schema)
+    return _driver_df(spark, [("node", node_type), ("at", LongType())], arr.items())
 
 
 def temporal_earliest_arrival_oracle_sql(

@@ -8,7 +8,11 @@ outgrew the driver's capture and BENCH_r06.json recorded ``parsed: null``):
    "anchor_sec": A, "full": "BENCH_FULL_r{N}.json"}
 
 The full report — per-query noise bands, anchored ratios, cross-round
-deltas, protocol notes — is written to ``BENCH_FULL_r{N}.json`` in-repo.
+deltas, protocol notes — is written to ``BENCH_FULL_r{N}.json`` in-repo,
+where N is one past the newest ``BENCH_r*.json``. A run refuses (exit 1,
+nothing written) to overwrite a ``BENCH_FULL_r{N}.json`` recorded with a
+different ``cpus`` or ``sf_dir``. Both records carry ``lane``: ``raw`` when
+every table is one parquet file (the driver's fixtures), else ``split``.
 
 ``anchor_sec`` is an in-run calibration: the median of 5 timed runs of a
 fixed workload (``spark.range(1_000_000).sum()``). Machine-wide state
@@ -30,7 +34,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from arc_cassandra_pipeline_plugin_spark.queries import load_all
-from arc_cassandra_pipeline_plugin_spark.sources import get_spark, load_table
+from arc_cassandra_pipeline_plugin_spark.sources import TABLES, get_spark, load_table, table_path
 
 #: representative mix: scan-agg, multi-join, window, cube, time-series,
 #: dedup, similarity, text, multimodal
@@ -135,6 +139,15 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
     if env_dir is None:
         sf_dir = _split_fixture_dir(sf_dir)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    lane = _lane(sf_dir)
+    this_round = _next_round_number()
+    full_name = f"BENCH_FULL_r{this_round:02d}.json"
+    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), full_name)
+    clash = _record_clash(full_path, cpus, sf_dir)
+    if clash:
+        print(f"refusing to overwrite {full_name}: {clash}", file=sys.stderr)
+        sys.exit(1)
     registry = load_all()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -238,7 +251,6 @@ def main() -> None:
     prev_q: dict[str, float] = {}
     prev_anchored: dict[str, float] = {}
     prev_file = None
-    this_round = _next_round_number()
     for cand in _prev_records():
         if int(re.search(r"\d+", os.path.basename(cand)).group()) >= this_round:
             continue  # a mid-round FULL record of THIS round is not "previous"
@@ -297,8 +309,6 @@ def main() -> None:
     # bench-only probe is ADDITIVE evidence (extra key in `queries`), never
     # part of the cross-round total
     total = round(sum(v for k, v in timings.items() if k != PROBE_NAME), 3)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    full_name = f"BENCH_FULL_r{this_round:02d}.json"
     full = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -316,6 +326,7 @@ def main() -> None:
         "prev_note": prev_note,
         "sf": sf,
         "sf_dir": sf_dir,
+        "lane": lane,
         "trials": N_TRIALS,
         "protocol": "median of 5 INTERLEAVED round-robin trials per "
         "query after one untimed warmup pass of each query on the "
@@ -332,7 +343,6 @@ def main() -> None:
         "ratios. r3+ measures on multi-file split fixtures — absolute "
         "times NOT comparable to BENCH_r1/r2 (single-row-group scans)",
     }
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), full_name)
     try:
         with open(full_path, "w") as fh:
             json.dump(full, fh, indent=1)
@@ -349,6 +359,7 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "cpus": cpus,
+                "lane": lane,
                 "anchor_sec": round(anchor_sec, 4),
                 "full": full_name,
             },
@@ -372,6 +383,30 @@ def _prev_records() -> list[str]:
         reverse=True,
     )
     return [os.path.join(root, f) for f in cands]
+
+
+def _lane(sf_dir: str) -> str:
+    """``raw`` when every table is a single parquet file, else ``split``."""
+    single = all(os.path.isfile(table_path(sf_dir, t)) for t in TABLES)
+    return "raw" if single else "split"
+
+
+def _record_clash(path: str, cpus: int, sf_dir: str) -> str | None:
+    """Why the existing record at ``path`` must not be overwritten by this
+    run (it was made with another ``cpus`` or ``sf_dir``), else None."""
+    try:
+        with open(path) as fh:
+            rec = json.load(fh)
+    except FileNotFoundError:
+        return None
+    except ValueError as exc:
+        return f"unparsable record ({exc})"
+    diff = [
+        f"{k}={rec.get(k)!r} (this run: {v!r})"
+        for k, v in (("cpus", cpus), ("sf_dir", sf_dir))
+        if rec.get(k) != v
+    ]
+    return ", ".join(diff) or None
 
 
 def _next_round_number() -> int:

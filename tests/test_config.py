@@ -364,10 +364,12 @@ def test_graph_example_pipeline_runs(spark, monkeypatch):
     """The shipped examples/graph.conf (HOCON) parses and runs end-to-end:
     5 extracts → SQL edge build → operator-library PageRank from config →
     SQLValidate fixed-point gate; the config-driven rank equals the direct
-    operator call on the same edges."""
+    operator call on the same edges. Runs on the driver replay and, with
+    the edge cap at 0, on the distributed rounds."""
     import os
 
     from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
     from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
 
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -380,13 +382,18 @@ def test_graph_example_pipeline_runs(spark, monkeypatch):
     assert [s.stage_type for s in p.stages] == (
         ["ParquetExtract"] * 5 + ["SQLTransform", "OperatorTransform", "SQLValidate"]
     )
-    p.run(spark, ctx)
-    got = {(r["node"], r["rank"]) for r in spark.table("trade_rank").collect()}
-    want = {
-        (r["node"], r["rank"])
-        for r in pagerank(spark.table("trade_edges"), iters=3, damping=0.85).collect()
-    }
-    assert got == want and len(got) == 25
+    ranks = []
+    for edge_cap in (G._DRIVER_EDGE_CAP, 0):
+        monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", edge_cap)
+        p.run(spark, ctx)
+        got = {(r["node"], r["rank"]) for r in spark.table("trade_rank").collect()}
+        want = {
+            (r["node"], r["rank"])
+            for r in pagerank(spark.table("trade_edges"), iters=3, damping=0.85).collect()
+        }
+        assert got == want and len(got) == 25, edge_cap
+        ranks.append(got)
+    assert ranks[0] == ranks[1]
 
 
 def test_dedup_example_pipeline_runs(spark, monkeypatch):

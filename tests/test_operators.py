@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from arc_cassandra_pipeline_plugin_spark.operators import dedup as D
@@ -490,9 +491,14 @@ def test_cluster_by_zorder_tightens_both_dims(spark):
     assert max(s.dy for s in spans) <= 32
 
 
-def test_pagerank_uniform_on_symmetric_cycle(spark):
-    """On a symmetric cycle every node has equal rank at every iteration."""
+def test_pagerank_uniform_on_symmetric_cycle(spark, monkeypatch):
+    """On a symmetric cycle every node has equal rank at every iteration
+    (distributed rounds; the driver replay equals them, see
+    test_graph_driver_replay_equals_distributed)."""
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
     from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
+
+    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 0)
 
     edges = spark.createDataFrame(
         [("a", "b", 1), ("b", "c", 1), ("c", "a", 1)], "src string, dst string, w long"
@@ -502,9 +508,13 @@ def test_pagerank_uniform_on_symmetric_cycle(spark):
     assert all(abs(v - 1.0 / 3.0) < 1e-9 for v in ranks.values())
 
 
-def test_pagerank_sink_attracts_mass(spark):
-    """A node every other node points at accumulates the highest rank."""
+def test_pagerank_sink_attracts_mass(spark, monkeypatch):
+    """A node every other node points at accumulates the highest rank
+    (distributed rounds)."""
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
     from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
+
+    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 0)
 
     edges = spark.createDataFrame(
         [("a", "hub", 2), ("b", "hub", 3), ("c", "hub", 1), ("hub", "a", 1)],
@@ -515,173 +525,196 @@ def test_pagerank_sink_attracts_mass(spark):
     assert abs(sum(ranks.values())) > 0
 
 
-def test_pagerank_driver_iterate_bit_equal_to_distributed(spark):
-    """The opt-in driver-side iterate (r12) must be BIT-identical to the
-    distributed rounds — same 12-dp grid, same decimal contribution sums —
-    on an irregular weighted graph (non-uniform out-weights, a dangling
-    sink, parallel-free multi-edges)."""
-    from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
+def _ring_edges(spark, n, fanout, step, value, schema):
+    """Irregular directed test graph: node ``a`` points at
+    ``(a * step + b) % n`` for ``b < fanout`` (self-loops dropped), with a
+    per-edge third column ``value(a, b)``."""
+    return spark.createDataFrame(
+        [
+            (f"n{a}", f"n{(a * step + b) % n}", value(a, b))
+            for a in range(n)
+            for b in range(fanout)
+            if a != (a * step + b) % n
+        ],
+        schema,
+    )
 
-    edges = [
-        (f"n{a}", f"n{(a * 3 + b) % 13}", (a * 5 + b * 7) % 9 + 1)
-        for a in range(13)
-        for b in range(4)
-        if a != (a * 3 + b) % 13
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string, w long")
-    dist = {(r.node, r.rank) for r in pagerank(df, iters=3).collect()}
-    drv = {(r.node, r.rank) for r in pagerank(df, iters=3, driver_iterate=True).collect()}
+
+def _weighted_13(spark):
+    # non-uniform out-weights and a dangling sink
+    return _ring_edges(
+        spark, 13, 4, 3, lambda a, b: (a * 5 + b * 7) % 9 + 1,
+        "src string, dst string, w long",
+    )
+
+
+def _unweighted_13(spark):
+    return _ring_edges(spark, 13, 6, 3, lambda a, b: 1, "src string, dst string, w long")
+
+
+def _costed_11(spark):
+    return _ring_edges(
+        spark, 11, 3, 5, lambda a, b: (a * 3 + b) % 7 + 1,
+        "src string, dst string, cost long",
+    )
+
+
+def _timed_9(spark):
+    return _ring_edges(
+        spark, 9, 3, 3, lambda a, b: 1990 + (a + b) % 6,
+        "src string, dst string, et long",
+    )
+
+
+def _fractional_20(spark):
+    # fractional weights: the decimal sum runs before the bigint projection
+    return spark.createDataFrame(
+        [
+            (f"n{a}", f"n{b}", ((a * 7 + b) % 5) / 2 + 0.5)
+            for a in range(20)
+            for b in range(20)
+            if a != b and (a * 31 + b * 17) % 7 == 0
+        ],
+        "src string, dst string, w double",
+    )
+
+
+#: operator -> (driver kernel, call, check on the result rows)
+_DRIVER_REPLAY_CASES = {
+    "pagerank": (
+        "_personalized_pagerank_driver",
+        lambda G, spark: G.pagerank(_weighted_13(spark), iters=3),
+        lambda rows: len(rows) == 13,
+    ),
+    "personalized_pagerank": (
+        "_personalized_pagerank_driver",
+        # a seed outside the graph counts into |S| but gets no mass
+        lambda G, spark: G.personalized_pagerank(
+            _weighted_13(spark),
+            spark.createDataFrame([("n1",), ("n4",), ("zz_outside",)], "node string"),
+            iters=3,
+        ),
+        lambda rows: len(rows) == 13,
+    ),
+    "hits": (
+        "_hits_driver",
+        lambda G, spark: G.hits(_weighted_13(spark), iters=3),
+        lambda rows: len(rows) == 13,
+    ),
+    "kcore_vertices": (
+        "_kcore_driver",
+        lambda G, spark: G.kcore_vertices(_unweighted_13(spark), k=4, rounds=2),
+        lambda rows: len(rows) > 3,
+    ),
+    "ktruss_edges": (
+        "_ktruss_driver",
+        lambda G, spark: G.ktruss_edges(_unweighted_13(spark), k=4, rounds=2),
+        lambda rows: len(rows) > 3,
+    ),
+    "hash_random_walk": (
+        "_hash_random_walk_driver",
+        lambda G, spark: G.hash_random_walk(_unweighted_13(spark), steps=4),
+        lambda rows: len(rows) == 13,
+    ),
+    "sssp_cheapest": (
+        "_sssp_driver",
+        lambda G, spark: G.sssp_cheapest(_costed_11(spark), rounds=3),
+        lambda rows: len(rows) > 3,
+    ),
+    "bfs_levels": (
+        "_bfs_driver",
+        lambda G, spark: G.bfs_levels(_costed_11(spark), rounds=3),
+        lambda rows: len(rows) > 3,
+    ),
+    "temporal_earliest_arrival": (
+        "_temporal_earliest_driver",
+        # duplicate seed nodes are min-merged in the first round
+        lambda G, spark: G.temporal_earliest_arrival(
+            _timed_9(spark),
+            spark.createDataFrame(
+                [("n0", 1991), ("n4", 1993), ("n0", 1990)], "node string, t0 long"
+            ),
+            rounds=3,
+        ),
+        lambda rows: len(rows) >= 2,
+    ),
+    "label_propagation": (
+        "_label_propagation_driver",
+        lambda G, spark: G.label_propagation(_fractional_20(spark), rounds=3),
+        lambda rows: len(rows) == 20,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_DRIVER_REPLAY_CASES))
+def test_graph_driver_replay_equals_distributed(spark, monkeypatch, op):
+    """Within the edge cap every graph operator replays its rounds on the
+    driver, and the replay returns exactly the rows of the distributed
+    rounds (same fixed-point grids, same integer and decimal algebra, same
+    tie rules). The reference runs with the cap at 0 and the driver kernel
+    patched to raise, so it provably took the distributed path."""
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
+
+    kernel, call, check = _DRIVER_REPLAY_CASES[op]
+    real = getattr(G, kernel)
+    calls = []
+
+    def spy(*args):
+        calls.append(op)
+        return real(*args)
+
+    def refuse(*args):
+        raise AssertionError(f"{kernel} ran past the driver cap")
+
+    monkeypatch.setattr(G, kernel, spy)
+    got = sorted(tuple(r) for r in call(G, spark).collect())
+    assert calls, f"{op} did not take the driver replay within the cap"
+    monkeypatch.setattr(G, kernel, refuse)
+    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 0)
+    want = sorted(tuple(r) for r in call(G, spark).collect())
+    assert got == want and check(got)
+
+
+def test_bounded_collect_cap_is_inclusive(spark, monkeypatch):
+    """The driver gate admits a rollup of exactly ``_DRIVER_EDGE_CAP``
+    rows and refuses one more."""
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
+
+    df = spark.createDataFrame([(1,), (2,), (3,)], "x int")
+    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 3)
+    assert sorted(r.x for r in G._bounded_collect(df)) == [1, 2, 3]
+    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
+    assert G._bounded_collect(df) is None
+
+
+def test_pagerank_driver_iterate_bit_equal_to_distributed(spark, monkeypatch):
+    """PageRank's driver replay is BIT-identical to the distributed rounds
+    (same 12-dp grid, same decimal contribution sums) on an irregular
+    weighted graph with non-uniform out-weights and a dangling sink."""
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
+
+    df = _weighted_13(spark)
+    drv = {(r.node, r.rank) for r in G.pagerank(df, iters=3).collect()}
+    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 0)
+    dist = {(r.node, r.rank) for r in G.pagerank(df, iters=3).collect()}
     assert drv == dist and len(drv) == 13
 
 
 def test_pagerank_driver_iterate_cap_falls_back_to_distributed(spark, monkeypatch):
-    """Past the dimension cap the bounded collect bails out and the
-    distributed path runs — a misdeclared graph degrades to correct."""
+    """Past the edge cap the bounded collect bails out and the distributed
+    rounds run instead of the driver kernel, with the same ranks."""
     from arc_cassandra_pipeline_plugin_spark.operators import graph as G
+
+    def refuse(*args):
+        raise AssertionError("driver replay ran past the edge cap")
 
     edges = [("a", "b", 1), ("b", "c", 2), ("c", "a", 3)]
     df = spark.createDataFrame(edges, "src string, dst string, w long")
     want = {(r.node, r.rank) for r in G.pagerank(df, iters=2).collect()}
     monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    got = {(r.node, r.rank) for r in G.pagerank(df, iters=2, driver_iterate=True).collect()}
-    assert got == want
-
-
-def test_temporal_arrival_driver_iterate_bit_equal(spark, monkeypatch):
-    """Driver-side time-respecting relaxation equals the distributed
-    iterate exactly, including duplicate seed nodes (min-merged in the
-    first round) and unreachable nodes; past the cap the distributed
-    path runs."""
-    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
-
-    edges = [
-        (f"n{a}", f"n{(a * 3 + b) % 9}", 1990 + (a + b) % 6)
-        for a in range(9)
-        for b in range(3)
-        if a != (a * 3 + b) % 9
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string, et long")
-    seeds = spark.createDataFrame(
-        [("n0", 1991), ("n4", 1993), ("n0", 1990)], "node string, t0 long"
-    )
-    want = {tuple(r) for r in G.temporal_earliest_arrival(df, seeds, rounds=3).collect()}
-    got = {
-        tuple(r)
-        for r in G.temporal_earliest_arrival(df, seeds, rounds=3, driver_iterate=True).collect()
-    }
-    assert got == want and len(got) >= 2
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    assert {
-        tuple(r)
-        for r in G.temporal_earliest_arrival(df, seeds, rounds=3, driver_iterate=True).collect()
-    } == want
-
-
-def test_kcore_ktruss_walk_driver_iterate_bit_equal(spark, monkeypatch):
-    """Driver-side k-core/k-truss peels (integer counting) and the
-    hash-seeded walk (hashlib md5 replay, lexicographic neighbor order)
-    equal the distributed iterates exactly; past the cap the distributed
-    paths run."""
-    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
-
-    edges = [
-        (f"n{a}", f"n{(a * 3 + b) % 13}", 1)
-        for a in range(13)
-        for b in range(6)
-        if a != (a * 3 + b) % 13
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string, w long")
-    want_c = {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2).collect()}
-    got_c = {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2, driver_iterate=True).collect()}
-    assert got_c == want_c and len(got_c) > 3
-    want_t = {tuple(r) for r in G.ktruss_edges(df, k=4, rounds=2).collect()}
-    got_t = {tuple(r) for r in G.ktruss_edges(df, k=4, rounds=2, driver_iterate=True).collect()}
-    assert got_t == want_t and len(got_t) > 3
-    want_w = sorted(tuple(r) for r in G.hash_random_walk(df, steps=4).collect())
-    got_w = sorted(tuple(r) for r in G.hash_random_walk(df, steps=4, driver_iterate=True).collect())
-    assert got_w == want_w and len(got_w) == 13
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    assert {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2, driver_iterate=True).collect()} == want_c
-    assert sorted(tuple(r) for r in G.hash_random_walk(df, steps=4, driver_iterate=True).collect()) == want_w
-
-
-def test_hits_and_ppr_driver_iterate_bit_equal(spark, monkeypatch):
-    """Driver-side HITS (6-dp decimal algebra) and personalized-PageRank
-    (12-dp fixed point, seed teleport) equal the distributed iterates
-    bit-for-bit on an irregular weighted graph, including a seed that is
-    not a graph member (counts into |S|, gets no mass); past the cap the
-    distributed paths run."""
-    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
-
-    edges = [
-        (f"n{a}", f"n{(a * 3 + b) % 13}", (a * 5 + b * 7) % 9 + 1)
-        for a in range(13)
-        for b in range(4)
-        if a != (a * 3 + b) % 13
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string, w long")
-    want_h = {tuple(r) for r in G.hits(df, iters=3).collect()}
-    got_h = {tuple(r) for r in G.hits(df, iters=3, driver_iterate=True).collect()}
-    assert got_h == want_h and len(got_h) == 13
-    seeds = spark.createDataFrame([("n1",), ("n4",), ("zz_outside",)], "node string")
-    want_p = {tuple(r) for r in G.personalized_pagerank(df, seeds, iters=3).collect()}
-    got_p = {
-        tuple(r)
-        for r in G.personalized_pagerank(df, seeds, iters=3, driver_iterate=True).collect()
-    }
-    assert got_p == want_p and len(got_p) == 13
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    assert {tuple(r) for r in G.hits(df, iters=3, driver_iterate=True).collect()} == want_h
-    assert {
-        tuple(r)
-        for r in G.personalized_pagerank(df, seeds, iters=3, driver_iterate=True).collect()
-    } == want_p
-
-
-def test_sssp_bfs_driver_iterate_bit_equal(spark, monkeypatch):
-    """Driver-side Bellman-Ford / BFS rounds (r12) equal the distributed
-    iterates exactly (integer min arithmetic, same source rule, same
-    infinity sentinel); past the cap the distributed path runs."""
-    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
-
-    edges = [
-        (f"n{a}", f"n{(a * 5 + b) % 11}", (a * 3 + b) % 7 + 1)
-        for a in range(11)
-        for b in range(3)
-        if a != (a * 5 + b) % 11
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string, cost long")
-    want_s = {tuple(r) for r in G.sssp_cheapest(df, rounds=3).collect()}
-    got_s = {tuple(r) for r in G.sssp_cheapest(df, rounds=3, driver_iterate=True).collect()}
-    assert got_s == want_s and len(got_s) > 3
-    want_b = {tuple(r) for r in G.bfs_levels(df, rounds=3).collect()}
-    got_b = {tuple(r) for r in G.bfs_levels(df, rounds=3, driver_iterate=True).collect()}
-    assert got_b == want_b and len(got_b) > 3
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    assert {tuple(r) for r in G.sssp_cheapest(df, rounds=3, driver_iterate=True).collect()} == want_s
-    assert {tuple(r) for r in G.bfs_levels(df, rounds=3, driver_iterate=True).collect()} == want_b
-
-
-def test_label_propagation_driver_iterate_bit_equal(spark, monkeypatch):
-    """Driver-side LPA rounds (r12) equal the distributed iterate exactly,
-    including fractional-weight rollup (decimal sum before the bigint
-    projection) and the (votes DESC, label ASC) argmax; past the cap the
-    distributed path runs."""
-    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
-
-    edges = [
-        (f"n{a}", f"n{b}", ((a * 7 + b) % 5) / 2 + 0.5)
-        for a in range(20)
-        for b in range(20)
-        if a != b and (a * 31 + b * 17) % 7 == 0
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string, w double")
-    dist = {tuple(r) for r in G.label_propagation(df, rounds=3).collect()}
-    drv = {tuple(r) for r in G.label_propagation(df, rounds=3, driver_iterate=True).collect()}
-    assert drv == dist and len(drv) == 20
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 3)
-    capped = {tuple(r) for r in G.label_propagation(df, rounds=3, driver_iterate=True).collect()}
-    assert capped == dist
+    monkeypatch.setattr(G, "_personalized_pagerank_driver", refuse)
+    got = {(r.node, r.rank) for r in G.pagerank(df, iters=2).collect()}
+    assert got == want and len(got) == 3
 
 
 def test_compact_files_reduces_file_count(spark, tmp_path):
@@ -1817,12 +1850,16 @@ def test_chunk_overlap_tiling_invariants(spark):
                 assert c["n_tokens"] == W or lo + W >= n
 
 
-def test_label_propagation_partition_invariance(spark):
+def test_label_propagation_partition_invariance(spark, monkeypatch):
     """LPA determinism: identical labels under 1 vs 32 input partitions
-    (the synchronous min-label formulation cannot depend on layout)."""
+    (the synchronous min-label formulation cannot depend on layout). Only
+    the distributed rounds see the layout, so the driver replay is off."""
     from pyspark.sql import functions as F
 
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
     from arc_cassandra_pipeline_plugin_spark.operators.graph import label_propagation
+
+    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 0)
 
     edges = [(f"n{a}", f"n{b}", (a * 7 + b) % 5 + 1)
              for a in range(30) for b in range(30)

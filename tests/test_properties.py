@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -290,6 +291,20 @@ edges_strategy = st.lists(
 )
 
 
+def _on_both_paths(run):
+    """``run()`` once with the graph operators' driver replay and once on
+    their distributed rounds (driver edge cap 0). The two results must be
+    equal; that common result is returned."""
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
+
+    driver = run()
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(G, "_DRIVER_EDGE_CAP", 0)
+        distributed = run()
+    assert driver == distributed, (driver, distributed)
+    return distributed
+
+
 def _py_kcore(edges, k, rounds):
     """Reference bounded-round k-core peel in plain Python."""
     und = {(a, b) for a, b in edges if a != b}
@@ -308,17 +323,20 @@ def _py_kcore(edges, k, rounds):
 @_settings
 def test_kcore_matches_python_reference_and_is_monotone(spark, edges, k):
     """kcore_vertices == the plain-Python bounded peel for any graph, and
-    the (k+1)-core is always a subset of the k-core (monotonicity)."""
+    the (k+1)-core is always a subset of the k-core (monotonicity), on
+    both the driver replay and the distributed rounds."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import kcore_vertices
 
     df = spark.createDataFrame(edges, "src int, dst int")
-    got = {
+    got = _on_both_paths(lambda: {
         (r["a"], r["degree"])
         for r in kcore_vertices(df, k=k, rounds=2).collect()
-    }
+    })
     want = set(_py_kcore(edges, k, rounds=2).items())
     assert got == want
-    higher = {v for v, _ in kcore_vertices(df, k=k + 1, rounds=2).collect()}
+    higher = _on_both_paths(
+        lambda: {v for v, _ in kcore_vertices(df, k=k + 1, rounds=2).collect()}
+    )
     assert higher <= {v for v, _ in got}
 
 
@@ -346,10 +364,10 @@ def test_ktruss_matches_python_reference(spark, edges, k):
     from arc_cassandra_pipeline_plugin_spark.operators.graph import ktruss_edges
 
     df = spark.createDataFrame(edges, "src int, dst int")
-    got = {
+    got = _on_both_paths(lambda: {
         (r["a"], r["b"], r["support"])
         for r in ktruss_edges(df, k=k, rounds=2).collect()
-    }
+    })
     want = {(a, b, s) for (a, b), s in _py_ktruss(edges, k, rounds=2).items()}
     assert got == want
 
@@ -423,7 +441,8 @@ def test_personalized_pagerank_mass_and_seed_locality(spark, edges):
     1 + epsilon (teleport + damped flow, dangling mass dropped), every
     rank is non-negative, and with NO path into a non-seed component the
     teleport keeps all mass on seeds (locality — the property that makes
-    PPR a recommendation primitive)."""
+    PPR a recommendation primitive). Both the driver replay and the
+    distributed rounds are checked."""
     from pyspark.sql import functions as F
 
     from arc_cassandra_pipeline_plugin_spark.operators.graph import (
@@ -435,7 +454,9 @@ def test_personalized_pagerank_mass_and_seed_locality(spark, edges):
     )
     seeds = sorted({a for a, _ in edges})[:2]
     sdf = spark.createDataFrame([(s,) for s in seeds], "node int")
-    got = {r["node"]: r["rank"] for r in personalized_pagerank(df, sdf, iters=2).collect()}
+    got = _on_both_paths(lambda: {
+        r["node"]: r["rank"] for r in personalized_pagerank(df, sdf, iters=2).collect()
+    })
     assert all(v >= 0 for v in got.values())
     assert sum(got.values()) <= 1.0 + 1e-9
     want = _py_ppr(edges, set(seeds), iters=2)
@@ -934,7 +955,8 @@ def test_pava_matches_minimax_characterization(bins):
 def test_temporal_earliest_arrival_matches_bruteforce(spark, edges, t0, rounds):
     """Earliest time-respecting arrival == brute-force dynamic program on
     any random temporal graph, seed time, and round budget (within the
-    same number of synchronous relaxations)."""
+    same number of synchronous relaxations), on both the driver replay
+    and the distributed rounds."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import (
         temporal_earliest_arrival,
     )
@@ -944,10 +966,10 @@ def test_temporal_earliest_arrival_matches_bruteforce(spark, edges, t0, rounds):
         return
     e = spark.createDataFrame(edges, "src int, dst int, et long")
     seeds = spark.createDataFrame([(0, t0)], "node int, t0 long")
-    got = {
+    got = _on_both_paths(lambda: {
         r["node"]: r["at"]
         for r in temporal_earliest_arrival(e, seeds, rounds=rounds).collect()
-    }
+    })
 
     want = {0: t0}
     for _ in range(rounds):
@@ -1020,7 +1042,8 @@ def test_temporal_incremental_equals_full_fixpoint(spark, edges, t0, split):
     edges (et > split) equals the full-recompute fixpoint — on any random
     temporal graph, seed time, and split year. Both run to fixpoint
     (rounds = node count bounds the hop diameter: optimal earliest-arrival
-    paths are simple)."""
+    paths are simple). Checked on both the driver replay and the
+    distributed rounds."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import (
         temporal_earliest_arrival,
     )
@@ -1031,23 +1054,27 @@ def test_temporal_incremental_equals_full_fixpoint(spark, edges, t0, split):
     rounds = 7  # max 7 distinct nodes -> simple paths have <= 6 edges
     e = spark.createDataFrame(edges, "src int, dst int, et long")
     seeds = spark.createDataFrame([(0, t0)], "node int, t0 long")
-    full = {
-        r["node"]: r["at"]
-        for r in temporal_earliest_arrival(e, seeds, rounds=rounds).collect()
-    }
     from pyspark.sql import functions as F
 
-    base = e.filter(F.col("et") <= split)
-    delta = e.filter(F.col("et") > split)
-    arr_base = temporal_earliest_arrival(base, seeds, rounds=rounds) if base.count() else seeds.select("node", F.col("t0").alias("at"))
-    inc = {
-        r["node"]: r["at"]
-        for r in (
-            temporal_earliest_arrival(
-                delta, arr_base.select("node", F.col("at").alias("t0")), rounds=rounds
-            ) if delta.count() else arr_base
-        ).collect()
-    }
+    def full_and_incremental():
+        full = {
+            r["node"]: r["at"]
+            for r in temporal_earliest_arrival(e, seeds, rounds=rounds).collect()
+        }
+        base = e.filter(F.col("et") <= split)
+        delta = e.filter(F.col("et") > split)
+        arr_base = temporal_earliest_arrival(base, seeds, rounds=rounds) if base.count() else seeds.select("node", F.col("t0").alias("at"))
+        inc = {
+            r["node"]: r["at"]
+            for r in (
+                temporal_earliest_arrival(
+                    delta, arr_base.select("node", F.col("at").alias("t0")), rounds=rounds
+                ) if delta.count() else arr_base
+            ).collect()
+        }
+        return full, inc
+
+    full, inc = _on_both_paths(full_and_incremental)
     assert inc == full, (inc, full, split)
 
 
